@@ -289,13 +289,47 @@ final class CoddSession private (
     }
 
   /** One maintenance step of a view: compute the delta of its defining
-    * expression and stage it (reference: instance.rs:284-290). Duplicate
-    * delivery is harmless: promotion anti-joins against the view's stable set.
+    * expression and stage it (reference: instance.rs:284-290). Delta rules
+    * all end distinct, so promotion may skip the re-distinct; it still
+    * anti-joins against the view's stable set — except for a select chain,
+    * whose delta is novel by construction:
+    *
+    * A select never changes a tuple, so every tuple a view `σ…σ(I)` holds
+    * is one its dependee `I` promoted earlier — now in `Iˢ`, as promotion
+    * folds `I`'s recent into its stable before anything else. `I`'s recent
+    * is disjoint from `Iˢ` (promotion dedups against stable), so
+    * `σ(δI)` is disjoint from the view's stable set, and it is distinct
+    * because `δI` is. Each dependee recent reaches this step exactly once;
+    * two staged batches (a second delta, the init batch, or a failed
+    * round's [[rederive]]) take the ordinary dedup again.
     */
   private def viewDeltaStep(ref: Int): Unit = {
     val v = views(ref)
-    // delta rules all end distinct — promotion may skip the re-distinct
-    v.instance.insertDistinct(collectRecent(v.expr, newMemo))
+    val delta = collectRecent(v.expr, newMemo)
+    if (selectChain(v.expr)) v.instance.insertNovel(delta)
+    else v.instance.insertDistinct(delta)
+  }
+
+  /** Replace a view's staged deltas with its whole content over its
+    * dependees' committed state (stable ∪ recent), after a failed round
+    * of [[stabilizeFused]].
+    */
+  private def rederive(ref: Int): Unit = {
+    val v = views(ref)
+    val memo = newMemo
+    val s = collectStable(v.expr)
+    v.instance.restageEngineBatches(
+      if (deltaFree(v.expr, memo)) s else s.union(collectRecent(v.expr, memo)).distinct())
+  }
+
+  /** One or more `Select`s over a single relation or view. */
+  private def selectChain(e: Expr[_]): Boolean = e match {
+    case s: Select[_] =>
+      s.child match {
+        case _: Rel[_] | _: ViewExpr[_] => true
+        case c                          => selectChain(c)
+      }
+    case _ => false
   }
 
   /** Stabilize EVERY relation and view, batching each round of view
@@ -357,6 +391,17 @@ final class CoddSession private (
     *    exactly what the sequential `viewDeltaStep` captures;
     *  - instances whose epoch cannot defer (durable stores, over-budget
     *    promotions) run inline inside the walk, exactly as before.
+    *
+    * A round that throws (a wave action, or an inline epoch) rolls back
+    * every promotion it installed but did not commit
+    * ([[Instance.abortPrepared]]): no provisional recent survives to be
+    * folded with an unknown count, the round's checkpoints are freed, and
+    * the drained batches are staged again. A view stepped or owed a step
+    * in that round may hold deltas over a rolled-back recent, or have
+    * promoted one inline; it re-stages its whole content instead
+    * ([[rederive]]), which a retry dedups against its stable set. Views
+    * outside the closure get the delta of whatever did commit. A retry
+    * thus converges to the from-scratch answer.
     */
   private def stabilizeFused(rels0: Iterable[String], views0: Iterable[Int]): Unit = {
     // dependee closure (what sequential stabilizeView recursion reaches)
@@ -373,6 +418,23 @@ final class CoddSession private (
     val vs = vset.toSeq.filterNot(views(_).stabilizing)
     rs.foreach(relations(_).stabilizing = true)
     vs.foreach(views(_).stabilizing = true)
+    // promotions installed as provisional recents but not yet committed:
+    // a round that throws rolls exactly these back
+    val uncommitted = mutable.Buffer.empty[(Instance[Any], Instance.Prepared[Any])]
+    // dependent views owed a delta step by this round's changes: in-closure
+    // ones are staged just before their own walk slot (ONE composed 3-term
+    // step per view per round, recorded in `stepped`); the rest after commit
+    val toStage = mutable.SortedSet.empty[Int]
+    val stepped = mutable.SortedSet.empty[Int]
+    // out-of-closure dependents: stage only when a dependee really changed
+    // (post-commit `hasRecent` is exactly that signal)
+    def stageLive(id: Int): Unit = {
+      val v = views(id)
+      val live =
+        v.dependeeRels.exists(n => relations.get(n).exists(_.instance.hasRecent)) ||
+          v.dependeeViews.exists(i => views.get(i).exists(_.instance.hasRecent))
+      if (live) viewDeltaStep(id)
+    }
     try {
       val slots: Seq[Either[String, Int]] = rs.map(Left(_)) ++ vs.map(Right(_))
       def instOf(s: Either[String, Int]): Instance[Any] =
@@ -381,14 +443,12 @@ final class CoddSession private (
         s.fold(relations(_).dependents, views(_).dependents)
       var continue = true
       while (continue) {
-        // dependent views owed a delta step by this round's changes:
-        // in-closure ones are staged just before their own walk slot (ONE
-        // composed 3-term step per view per round); the rest after commit
-        val toStage = mutable.SortedSet.empty[Int]
+        toStage.clear()
+        stepped.clear()
         val prepared = mutable.Buffer.empty[(Either[String, Int], Instance.Prepared[Any])]
         var anyWork = false
         slots.foreach { s =>
-          s.foreach { id => if (toStage.remove(id)) viewDeltaStep(id) }
+          s.foreach { id => if (toStage.remove(id)) { viewDeltaStep(id); stepped += id } }
           val inst = instOf(s)
           if (inst.pendingCount > 0 || inst.hasRecent) {
             anyWork = true
@@ -397,6 +457,7 @@ final class CoddSession private (
               case Left(false) => ()
               case Right(p) =>
                 inst.installOptimistic(p)
+                uncommitted += ((inst, p))
                 prepared += ((s, p))
                 toStage ++= depsOf(s)
             }
@@ -447,18 +508,16 @@ final class CoddSession private (
             }
           prepared.zipWithIndex.foreach { case ((s, p), i) =>
             instOf(s).commitPrepared(p, counts(i))
+            uncommitted -= ((instOf(s), p))
           }
-          // out-of-closure dependents: stage only when a dependee really
-          // changed (post-commit `hasRecent` is exactly that signal)
-          toStage.foreach { id =>
-            val v = views(id)
-            val live =
-              v.dependeeRels.exists(n => relations.get(n).exists(_.instance.hasRecent)) ||
-                v.dependeeViews.exists(i => views.get(i).exists(_.instance.hasRecent))
-            if (live) viewDeltaStep(id)
-          }
+          toStage.foreach(stageLive)
         }
       }
+    } catch {
+      case t: Throwable =>
+        uncommitted.foreach { case (inst, p) => inst.abortPrepared(p) }
+        (stepped ++ toStage).foreach(id => if (vs.contains(id)) rederive(id) else stageLive(id))
+        throw t
     } finally {
       rs.foreach(relations(_).stabilizing = false)
       vs.foreach(views(_).stabilizing = false)

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Dataset, GraftColumnBridge, SaveMode, SparkSession}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.functions.broadcast
 
 import scala.collection.immutable.SortedSet
@@ -48,6 +49,24 @@ import scala.collection.immutable.SortedSet
   * (a bulk load into a non-empty store) does promotion fall back to a full
   * EXCEPT, which is then proportional to the data actually being loaded.
   *
+  * A staged batch whose stager guarantees it is NOVEL skips the dedup plan
+  * altogether when it is the epoch's only batch ([[insertNovel]]). The one
+  * such stager is a select-chain view `V = σ(I)`: its delta `σ(δI)` is
+  * disjoint from `σ(Iˢ) = Vˢ`, because promotion keeps `I`'s recent
+  * disjoint from `I`'s stable and each recent of `I` is delivered to `V`
+  * exactly once (see `CoddSession.viewDeltaStep`).
+  *
+  * Batches are sized by bytes, not by the width of the plan that built
+  * them ([[sized]]): a promotion that passed the fused-promotion gate is
+  * ONE partition; a measured-path broadcast promotion gets
+  * `ceil(measured bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)`,
+  * and a compaction rewrite the same but never fewer than its widest
+  * leaf's partitions (so the ingest run keeps its partitioning). The
+  * bulk-load EXCEPT reads all of stable and keeps its shuffle width.
+  * Per-epoch cost then follows the delta, not per-task overhead: a
+  * delta-sized batch checkpointed at the shuffle width would make every
+  * later read of stable a stage with one task per partition of every run.
+  *
   * At cluster scale each batch is a partitioned Dataset; the compaction rule
   * (merge trailing batches while `last.count <= 2 * recent.count`, reference
   * instance.rs:177-187) keeps the number of stable batches O(log n) so scans
@@ -62,11 +81,12 @@ final class Instance[T](
 
   private var stableBatches: Vector[Run[T]] = Vector.empty
   private var recentBatch: Option[Run[T]] = None
-  // (batch, preDistinct): engine-internal inserts (view deltas, view init)
+  // (batch, guarantee): engine-internal inserts (view deltas, view init)
   // are already sets — every delta/stable rule ends in distinct()/a set-op/
-  // the instance invariant — so a lone pre-distinct batch skips the staged
-  // re-distinct shuffle in [[changed]]. User inserts never carry the flag.
-  private var toAdd: Vector[(Dataset[T], Boolean)] = Vector.empty
+  // the instance invariant — so a lone engine batch skips the staged
+  // re-distinct shuffle in [[changed]], and a lone NOVEL one also skips the
+  // dedup against stable. User inserts are always `Raw`.
+  private var toAdd: Vector[(Dataset[T], Instance.Guarantee)] = Vector.empty
   private var batchCounter = 0
   private var manifestVersion = 0L
   private var counterInitialized = false
@@ -85,14 +105,23 @@ final class Instance[T](
   private var shared = false
 
   /** Stage a batch; O(1), no Spark job (reference: instance.rs:127-131). */
-  def insert(ds: Dataset[T]): Unit = synchronized { toAdd :+= (ds -> false) }
+  def insert(ds: Dataset[T]): Unit = synchronized { toAdd :+= (ds -> Instance.Raw) }
 
   /** Stage a batch the CALLER guarantees is already distinct (engine-internal
     * delta/init plans). When it is the epoch's only staged batch, promotion
     * skips the redundant distinct shuffle.
     */
   private[core] def insertDistinct(ds: Dataset[T]): Unit = synchronized {
-    toAdd :+= (ds -> true)
+    toAdd :+= (ds -> Instance.Distinct)
+  }
+
+  /** Stage a batch the CALLER guarantees is distinct AND disjoint from
+    * this instance's stable set at its promotion (a select-chain view's
+    * delta, see [[graft.core.CoddSession]]). When it is the epoch's only
+    * staged batch, promotion checkpoints it directly — no dedup plan.
+    */
+  private[core] def insertNovel(ds: Dataset[T]): Unit = synchronized {
+    toAdd :+= (ds -> Instance.Novel)
   }
 
   /** Deep-copy the three sets. Batches are immutable materialized Datasets,
@@ -163,6 +192,34 @@ final class Instance[T](
     */
   private def materializeTransient(ds: Dataset[T], eager: Boolean = false): Leaf[T] =
     Leaf(ds.localCheckpoint(eager), -1)
+
+  /** The one batch-sizing rule: every batch the engine materializes from
+    * a delta-sized plan (promotions, view-init batches, compaction
+    * rewrites) passes through here, so its partition count follows its
+    * bytes, not the plan's shuffle width or the union of the leaves it was
+    * built from.
+    *  - `bytes = None`: the batch passed the
+    *    [[Instance.FusedPromoteMaxBytes]] gate — its size is a proven
+    *    small upper bound — and becomes ONE partition;
+    *  - `bytes = Some(b)`: MEASURED bytes give
+    *    `max(floor, ceil(b / spark.sql.adaptive.advisoryPartitionSizeInBytes))`
+    *    partitions (`b < 0`, not measurable: the plan is left as is).
+    * Coalesce-only: no shuffle is added, and a batch never gets more
+    * partitions than its plan already has.
+    */
+  private def sized(ds: Dataset[T], bytes: Option[Long] = None, floor: Int = 1): Dataset[T] =
+    bytes match {
+      case None => ds.coalesce(1)
+      case Some(b) if b >= 0 =>
+        ds.coalesce(math.max(floor, Instance.partitionsFor(b, JavaUtils.byteStringAsBytes(
+          session.conf.get(Instance.AdvisoryPartitionSizeKey)))))
+      case _ => ds
+    }
+
+  /** The optimizer's size estimate of `ds` in bytes, -1 when unavailable. */
+  private def estBytes(ds: Dataset[T]): Long =
+    try ds.queryExecution.optimizedPlan.stats.sizeInBytes.min(BigInt(Long.MaxValue)).toLong
+    catch { case _: Throwable => -1L }
 
   /** Materialize a batch that becomes part of stable ∪ recent content —
     * parquet under a [[Instance.ReliableStore]], block-manager otherwise.
@@ -332,7 +389,9 @@ final class Instance[T](
   def changed(): Boolean = synchronized {
     prepareChanged() match {
       case Left(done) => done
-      case Right(p)   => commitPrepared(p, p.leaf.ds.count())
+      case Right(p) =>
+        val n = try p.leaf.ds.count() catch { case t: Throwable => abortPrepared(p); throw t }
+        commitPrepared(p, n)
     }
   }
 
@@ -347,79 +406,92 @@ final class Instance[T](
     * durable stores (their materialization is a parquet write, an action
     * of its own) and non-fusable/over-budget promotions (the measured
     * path needs its own count before the broadcast-vs-EXCEPT choice) —
-    * all of which run exactly the undeferred epoch.
+    * all of which run exactly the undeferred epoch. If building throws
+    * before a promotion is installed, the drained batches are staged
+    * again.
     */
   private[core] def prepareChanged(): Either[Boolean, Instance.Prepared[T]] = synchronized {
     foldRecent()
     if (toAdd.isEmpty) { commitState(); Left(false) }
     else {
-      // a single pre-distinct batch (the common view-delta epoch) needs no
-      // staged re-distinct; anything else unions and dedups
-      val engineBatch = toAdd.size == 1 && toAdd.head._2
-      val staged =
-        if (engineBatch) toAdd.head._1
-        else
-          (if (toAdd.size == 1) toAdd.head._1
-           else toAdd.map(_._1).reduce(_ union _)).distinct()
+      val drained = toAdd
       toAdd = Vector.empty
-      val direct = engineBatch || Instance.provablyFusable(staged)
-      val pinnedSafe = !direct && Instance.estimateUpperBoundSafe(staged)
-      def inline(): Either[Boolean, Instance.Prepared[T]] = {
-        val r =
-          if (stableBatches.isEmpty) firstBatch(staged)
-          else promote(staged, fusable = direct, pinnedFusable = pinnedSafe)
-        commitState()
-        Left(r)
+      try build(drained)
+      catch {
+        case t: Throwable =>
+          if (recentBatch.isEmpty) toAdd = drained ++ toAdd
+          throw t
       }
-      def estOf(ds: Dataset[T]): Long =
-        try ds.queryExecution.optimizedPlan.stats.sizeInBytes
-          .min(BigInt(Long.MaxValue)).toLong
-        catch { case _: Throwable => -1L }
-      if (policy != Instance.LocalCheckpoint) inline()
-      else if (stableBatches.isEmpty) {
-        // The lazy first ingest stays INLINE (persist+count under the
-        // user's AQE session). Deferring it was tried in r14 and reverted:
-        // the cache's child plan compiles ADAPTIVE, so a dependent's
-        // twin-checkpoint prepare executes the whole ingest eagerly at
-        // RDD-construction time — the exact serialization deferral exists
-        // to remove — and a fully persist-based deferral measured slower
-        // with wild variance on the view family (OPTIMIZATION_r14.md).
-        if (lazyFirstBatch) inline()
-        else
-          Right(Instance.Prepared(
-            materializeTransient(
-              GraftColumnBridge.withSession(staged, Instance.planSession(session))),
-            None, estBytes = estOf(staged)))
-      } else {
-        // mirror [[promote]]'s fused-regime gate exactly: a deferred
-        // promotion must be the same one-job plan the inline path builds
-        val est =
-          if (!direct && !pinnedSafe) BigInt(Long.MaxValue)
-          else
-            try staged.queryExecution.optimizedPlan.stats.sizeInBytes
-            catch { case _: Throwable => BigInt(Long.MaxValue) }
-        if (est > Instance.FusedPromoteMaxBytes) inline()
-        else {
-          // compile the deferred plan under the AQE-OFF twin session: a
-          // lazy checkpoint's toRdd on an ADAPTIVE plan executes every
-          // non-result stage at prepare time (one eager action per view —
-          // exactly the serialization the batched rounds exist to remove);
-          // classically compiled, only the plan's BroadcastExchange
-          // futures run at prepare (they block at RDD construction — an
-          // r14 persist-based variant that deferred even those measured
-          // SLOWER with much higher variance on the view family and was
-          // reverted; see OPTIMIZATION_r14.md). commitPrepared re-homes
-          // the materialized batch to the user's session.
-          val twin = Instance.planSession(session)
-          val pin =
-            if (direct) None
-            else Some(materializeTransient(GraftColumnBridge.withSession(staged, twin)))
-          val novel = broadcastNovelPlan(pin.map(_.ds).getOrElse(staged))
-          Right(Instance.Prepared(
-            materializeTransient(GraftColumnBridge.withSession(novel, twin)),
-            pin, estBytes = est.min(BigInt(Long.MaxValue)).toLong))
-        }
-      }
+    }
+  }
+
+  /** The promotion of the batches [[prepareChanged]] drained. */
+  private def build(
+      drained: Vector[(Dataset[T], Instance.Guarantee)]): Either[Boolean, Instance.Prepared[T]] = {
+    // a single engine batch (the common view-delta epoch) needs no
+    // staged re-distinct; anything else unions and dedups
+    val lone = if (drained.size == 1) Some(drained.head._2) else None
+    val engineBatch = lone.exists(_ != Instance.Raw)
+    val novel = lone.contains(Instance.Novel)
+    val staged =
+      if (engineBatch) drained.head._1
+      else
+        (if (drained.size == 1) drained.head._1
+         else drained.map(_._1).reduce(_ union _)).distinct()
+    val direct = engineBatch || Instance.provablyFusable(staged)
+    val pinnedSafe = !direct && Instance.estimateUpperBoundSafe(staged)
+    val est = estBytes(staged)
+    // [[promote]]'s fused-regime gate: the estimate is a proven upper
+    // bound only for certified plans, and a deferred promotion must be
+    // the same one-job plan the inline path builds
+    val gated = (direct || pinnedSafe) && est >= 0 && BigInt(est) <= Instance.FusedPromoteMaxBytes
+    def inline(): Either[Boolean, Instance.Prepared[T]] = {
+      val r =
+        if (stableBatches.isEmpty) firstBatch(staged, gated)
+        else promote(staged, gated, direct)
+      commitState()
+      Left(r)
+    }
+    if (policy != Instance.LocalCheckpoint) inline()
+    else if (stableBatches.isEmpty) {
+      // The lazy first ingest stays INLINE (persist+count under the
+      // user's AQE session). Deferring it was tried in r14 and reverted:
+      // the cache's child plan compiles ADAPTIVE, so a dependent's
+      // twin-checkpoint prepare executes the whole ingest eagerly at
+      // RDD-construction time — the exact serialization deferral exists
+      // to remove — and a fully persist-based deferral measured slower
+      // with wild variance on the view family (OPTIMIZATION_r14.md).
+      if (lazyFirstBatch) inline()
+      else
+        Right(Instance.Prepared(
+          materializeTransient(GraftColumnBridge.withSession(
+            if (gated) sized(staged) else staged, Instance.planSession(session))),
+          None, est, drained))
+    } else if (!gated) inline()
+    else {
+      // compile the deferred plan under the AQE-OFF twin session: a
+      // lazy checkpoint's toRdd on an ADAPTIVE plan executes every
+      // non-result stage at prepare time (one eager action per view —
+      // exactly the serialization the batched rounds exist to remove);
+      // classically compiled, only the plan's BroadcastExchange
+      // futures run at prepare (they block at RDD construction — an
+      // r14 persist-based variant that deferred even those measured
+      // SLOWER with much higher variance on the view family and was
+      // reverted; see OPTIMIZATION_r14.md). commitPrepared re-homes
+      // the materialized batch to the user's session.
+      val twin = Instance.planSession(session)
+      val pin =
+        if (direct) None
+        else Some(materializeTransient(GraftColumnBridge.withSession(staged, twin)))
+      try {
+        // a lone novel batch is disjoint from stable by its stager's
+        // guarantee: checkpoint it as is — no dedup plan, so no
+        // broadcast job runs at prepare time
+        val batch = if (novel) staged else broadcastNovelPlan(pin.map(_.ds).getOrElse(staged))
+        Right(Instance.Prepared(
+          materializeTransient(GraftColumnBridge.withSession(sized(batch), twin)),
+          pin, est, drained))
+      } catch { case t: Throwable => pin.foreach(retire); throw t }
     }
   }
 
@@ -443,6 +515,30 @@ final class Instance[T](
           p.leaf.ds, p.estBytes, math.max(1L, p.estBytes / 16L))
       else p.leaf.ds
     recentBatch = Some(Run(ds, -1L, p.depth, Vector(p.leaf)))
+  }
+
+  /** Undo a [[prepareChanged]] `Right` whose round failed before
+    * [[commitPrepared]]: drop the provisional `recent` an
+    * [[installOptimistic]] put in place (its count is unknown — folding
+    * it would corrupt `stableCount` and the compaction thresholds),
+    * retire the epoch-private leaf and pin, and stage the drained batches
+    * again, ahead of anything staged since: `stable` keeps exactly the
+    * content it held before the round, and no insert is lost.
+    */
+  private[core] def abortPrepared(p: Instance.Prepared[T]): Unit = synchronized {
+    if (recentBatch.exists(_.leaves.contains(p.leaf))) recentBatch = None
+    retire(p.leaf)
+    p.pin.foreach(retire)
+    toAdd = p.drained ++ toAdd
+  }
+
+  /** Replace every engine-staged batch with `full`, a plan of this view's
+    * whole content (see `CoddSession.stabilizeFused`): the replaced
+    * deltas may read promotions a failed round rolled back. `full` is
+    * staged as merely distinct, so its promotion dedups against stable.
+    */
+  private[core] def restageEngineBatches(full: Dataset[T]): Unit = synchronized {
+    toAdd = toAdd.filter(_._2 == Instance.Raw) :+ (full -> Instance.Distinct)
   }
 
   /** Phase 2: bookkeeping for a [[prepareChanged]] `Right`, given the
@@ -497,8 +593,14 @@ final class Instance[T](
       if (merged.depth > Instance.MaxUnionDepth ||
         (cachedRun(merged) && stableBatches.exists(cachedRun))) {
         // eager: the replacement must be fully materialized while its
-        // inputs are still certainly readable
-        val leaf = measured(materializeDurable(merged.ds, eager = true), merged.count)
+        // inputs are still certainly readable. Its leaves carry measured
+        // statistics, so the union's size is the run's measured bytes; it
+        // keeps at least the partitions of its widest leaf, so the ingest
+        // run's partitioning survives and only delta leaves collapse.
+        val widest = merged.leaves.map(_.ds.rdd.getNumPartitions).foldLeft(1)(math.max)
+        val leaf = measured(
+          materializeDurable(sized(merged.ds, Some(estBytes(merged.ds)), widest), eager = true),
+          merged.count)
         merged.leaves.foreach(condemn)
         merged = Run(leaf.ds, merged.count, 0, Vector(leaf))
       }
@@ -515,7 +617,7 @@ final class Instance[T](
     * distinct, and [[close]]/retirement free it. Net: ONE execution of the
     * ingest plan for the dominant one-shot ingest-and-query shape.
     */
-  private def firstBatch(staged: Dataset[T]): Boolean = policy match {
+  private def firstBatch(staged: Dataset[T], gated: Boolean): Boolean = policy match {
     case Instance.LocalCheckpoint if lazyFirstBatch =>
       val cached = staged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = cached.count()
@@ -525,7 +627,7 @@ final class Instance[T](
         true
       } else { cached.unpersist(false); false }
     case _ =>
-      val raw = materializeDurable(staged)
+      val raw = materializeDurable(if (gated) sized(staged) else staged)
       val n = raw.ds.count()
       val leaf = measured(raw, n)
       if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
@@ -577,36 +679,31 @@ final class Instance[T](
     *
     * The fused plan references `staged` TWICE (broadcast build side and
     * anti-join probe side), so it needs both evaluations to agree AND the
-    * size ESTIMATE to be a trustworthy upper bound. Three regimes:
+    * size ESTIMATE to be a trustworthy upper bound. Three regimes, chosen
+    * by the caller's gate ([[prepareChanged]]):
     *
-    *  - `fusable` (direct fuse): engine-internal pre-distinct batches
-    *    (deterministic by construction — built over materialized recents)
-    *    and user plans [[Instance.provablyFusable]] certifies (no
+    *  - `gated && direct` (direct fuse): engine-internal pre-distinct
+    *    batches (deterministic by construction — built over materialized
+    *    recents) and user plans [[Instance.provablyFusable]] certifies (no
     *    nondeterministic expressions, no Generate/typed-closure nodes) —
     *    both sides provably evaluate identically, no pinning needed.
-    *  - `pinnedFusable`: plans that CANNOT be certified deterministic
-    *    (typed-closure filters, rand projections) but whose estimate is
-    *    still an upper bound ([[Instance.estimateUpperBoundSafe]] — no
-    *    row- or size-expanding nodes). A LAZY executor-storage checkpoint
-    *    pins exactly one evaluation: the broadcast build job computes and
-    *    caches the blocks, the probe side reads them — same job count as
-    *    the direct fuse, plus only the block writes.
-    *  - everything else (row-expanding plans, estimate unavailable): the
-    *    measured path, which checkpoints + counts staged first — the
-    *    broadcast-vs-EXCEPT choice is then made on MEASURED bytes.
+    *  - `gated && !direct` (pinned fuse): plans that CANNOT be certified
+    *    deterministic (typed-closure filters, rand projections) but whose
+    *    estimate is still an upper bound
+    *    ([[Instance.estimateUpperBoundSafe]] — no row- or size-expanding
+    *    nodes). A LAZY executor-storage checkpoint pins exactly one
+    *    evaluation: the broadcast build job computes and caches the
+    *    blocks, the probe side reads them — same job count as the direct
+    *    fuse, plus only the block writes.
+    *  - `!gated` (row-expanding plans, estimate unavailable or over
+    *    budget): the measured path, which checkpoints + counts staged
+    *    first — the broadcast-vs-EXCEPT choice and a broadcast
+    *    promotion's partition count are then made on MEASURED bytes.
     */
-  private def promote(
-      staged: Dataset[T],
-      fusable: Boolean,
-      pinnedFusable: Boolean = false): Boolean = {
-    val est =
-      if (!fusable && !pinnedFusable) BigInt(Long.MaxValue)
-      else
-        try staged.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (est <= Instance.FusedPromoteMaxBytes) {
-      val pin = if (fusable) None else Some(materializeTransient(staged))
-      val raw = materializeDurable(broadcastNovelPlan(pin.map(_.ds).getOrElse(staged)))
+  private def promote(staged: Dataset[T], gated: Boolean, direct: Boolean): Boolean = {
+    if (gated) {
+      val pin = if (direct) None else Some(materializeTransient(staged))
+      val raw = materializeDurable(sized(broadcastNovelPlan(pin.map(_.ds).getOrElse(staged))))
       val n = raw.ds.count()
       val leaf = measured(raw, n)
       // novel is fully materialized by the count; the pin is epoch-private
@@ -624,10 +721,12 @@ final class Instance[T](
           if (stagedBytes >= 0) stagedBytes <= Instance.BroadcastPromoteMaxBytes
           else stagedN <= Instance.BroadcastPromoteMaxRows
         val novel =
-          if (broadcastable) broadcastNovelPlan(stagedCp)
+          // novel ⊆ staged: the staged batch's measured bytes bound it
+          if (broadcastable) sized(broadcastNovelPlan(stagedCp), Some(stagedBytes))
           else
             // Bulk load into a non-empty store: a broadcast would not fit;
-            // fall back to the full anti-join (work ∝ data being loaded).
+            // fall back to the full anti-join (work ∝ data being loaded),
+            // left at its shuffle width — it reads all of stable.
             stagedCp.except(stable)
         val raw = materializeDurable(novel)
         val n = raw.ds.count()
@@ -673,13 +772,37 @@ object Instance {
     * plan's size ESTIMATE — [[installOptimistic]] exposes it as
     * provisional leaf statistics so delta plans staged over the
     * uncommitted batch see a sane size instead of the unknown-leaf
-    * default.
+    * default. `drained` holds the staged batches the promotion consumed,
+    * for [[Instance.abortPrepared]] to stage again.
     */
   private[core] final case class Prepared[T](
       leaf: Leaf[T],
       pin: Option[Leaf[T]],
-      depth: Int = 0,
-      estBytes: Long = -1L)
+      estBytes: Long,
+      drained: Vector[(Dataset[T], Guarantee)],
+      depth: Int = 0)
+
+  /** What the stager of a batch guarantees about it (see [[insert]],
+    * [[insertDistinct]], [[insertNovel]]). `Raw`: nothing — user
+    * inserts, possibly duplicated, possibly already stable. `Distinct`:
+    * a set (every engine delta/init rule ends distinct). `Novel`: a set
+    * disjoint from the instance's stable content when it is promoted.
+    */
+  private[core] sealed trait Guarantee
+  private[core] case object Raw extends Guarantee
+  private[core] case object Distinct extends Guarantee
+  private[core] case object Novel extends Guarantee
+
+  /** The conf [[Instance]] sizes measured batches by — the same target
+    * AQE coalesces shuffle partitions to.
+    */
+  private[core] val AdvisoryPartitionSizeKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  /** `ceil(bytes / advisory)`, at least 1 and at most `Int.MaxValue`. */
+  private[core] def partitionsFor(bytes: Long, advisory: Long): Int = {
+    val a = math.max(1L, advisory)
+    math.min(Int.MaxValue.toLong, math.max(1L, bytes / a + (if (bytes % a == 0) 0 else 1))).toInt
+  }
 
   /** Max logical-union lineage depth of a stable run before it is
     * re-materialized: folds below this depth cost zero Spark jobs; the

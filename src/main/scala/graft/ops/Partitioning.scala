@@ -77,7 +77,8 @@ object Partitioning {
     *    task (measured r14: pipeline_dedup_cascade's simhash stage over
     *    stage-2 survivors, 5.9 s → 8.2 s when the exchange was dropped).
     * Never shrinks: the count floors at the configured shuffle width, the
-    * cluster-sized knob, not at local core count.
+    * cluster-sized knob, not at local core count — and at the topmost
+    * exchange's own count when the input was repartitioned wider still.
     */
   def densifyCpu(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
@@ -85,23 +86,33 @@ object Partitioning {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p                        => p
     }
-    if (plan.collectFirst { case e: ShuffleExchangeLike => e }.nonEmpty)
-      df.repartition(
-        math.max(par, df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
-    else
-      scanPartitions(plan) match {
-        case Some(parts) if parts < par => df.repartition(par)
-        case _                          => df
-      }
+    shuffleFloor(df, plan) match {
+      case Some(n) => df.repartition(math.max(par, n))
+      case None =>
+        scanPartitions(plan) match {
+          case Some(parts) if parts < par => df.repartition(par)
+          case _                          => df
+        }
+    }
   }
+
+  /** Floor for an exchange over a plan that already carries a shuffle:
+    * the configured shuffle width, or the topmost exchange's own count when
+    * the input was explicitly repartitioned wider. None = no shuffle.
+    */
+  private def shuffleFloor(df: DataFrame, plan: SparkPlan): Option[Int] =
+    plan.collectFirst { case e: ShuffleExchangeLike => e }.map { e =>
+      math.max(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, e.numPartitions)
+    }
 
   /** Partition count for an EXPLICIT exchange that must always run (pinned
     * layouts feeding [[declarePinnedHash]], AQE-coalescing-exempt CPU-bound
     * stages): at least `defaultParallelism`, and never a SHRINK of the
     * input — the count floors at the input's own scan split count
     * (scan-shaped plans, probed driver-side exactly like [[densify]]) or
-    * at the configured shuffle parallelism (plans already carrying a
-    * shuffle). On the local bench all three are the core count, so plans
+    * at the configured shuffle parallelism or the topmost exchange's own
+    * count, whichever is wider (plans already carrying a shuffle). On the
+    * local bench all three are the core count, so plans
     * are byte-identical; at warehouse scale a many-thousand-partition scan
     * keeps its parallelism instead of collapsing to core count — a
     * fixed-count `repartition(defaultParallelism)` there is a full shuffle
@@ -115,10 +126,7 @@ object Partitioning {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p                        => p
     }
-    val floor =
-      if (plan.collectFirst { case e: ShuffleExchangeLike => e }.nonEmpty)
-        sp.conf.get("spark.sql.shuffle.partitions").toInt
-      else scanPartitions(plan).getOrElse(par)
+    val floor = shuffleFloor(df, plan).getOrElse(scanPartitions(plan).getOrElse(par))
     math.max(par, floor)
   }
 

@@ -863,7 +863,9 @@ object Similarity {
           it.foreach { row =>
             if (!row.isNullAt(0)) {
               val arr = row.getSeq[Any](0)
-              var ok = true
+              // a ragged (short) vector drops the row like a null element:
+              // element_at past the end is null in the Column form
+              var ok = arr.length >= d
               var s = 0L
               var j = 0
               while (ok && j < d) {

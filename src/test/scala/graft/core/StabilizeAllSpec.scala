@@ -151,17 +151,40 @@ class StabilizeAllSpec extends AnyFunSuite {
     assert(db.evaluateSorted(v1) == (2 to 40 by 2))
     db.insert(r, 30 to 60)
     val e2 = probeExecutions { db.evaluate(both).count() }
-    // epoch 2: each of the 3 promotions still runs its prepare-time
+    // epoch 2: the relation's promotion still runs its prepare-time
     // checkpoint execution (the broadcast-dedup futures fire at RDD
-    // construction — inherent to Dataset.localCheckpoint), but the THREE
-    // per-instance count actions of the sequential path collapse into
-    // TWO wave actions (rel, then both views fused), plus the cached
-    // first batch's flatten and the consumer count: 3 + 2 + 1 + 1.
-    assert(e2 == 7, s"epoch 2 must be 3 prepares + 2 wave actions + flatten + 1 count, saw $e2")
+    // construction — inherent to Dataset.localCheckpoint); the two select
+    // views' deltas are novel by construction, so their prepares build no
+    // dedup plan and run nothing. The THREE per-instance count actions of
+    // the sequential path collapse into TWO wave actions (rel, then both
+    // views fused), plus the cached first batch's flatten and the
+    // consumer count: 1 + 2 + 1 + 1.
+    assert(e2 == 5, s"epoch 2 must be 1 prepare + 2 wave actions + flatten + 1 count, saw $e2")
     assert(db.evaluateSorted(v2) == (1 to 60 by 2))
     // a duplicate-only epoch: zero-novel commits must unwind cleanly
     db.insert(r, 30 to 60)
     assert(db.evaluateSorted(v1) == (2 to 60 by 2))
+    db.close()
+  }
+
+  test("a select-only fan-out epoch's prepares run zero jobs") {
+    // select views' deltas are novel by construction: each prepare
+    // checkpoints its delta as is, with no dedup plan whose broadcasts
+    // would run at RDD construction, so the round is its one wave action
+    val db = fresh
+    val r = db.addRelation[(Int, Int)]("r")
+    val vs = (0 until 4).map(i => db.storeView(r.select(_._2 % 4 == i)))
+    db.insert(r, (1 to 100).map(i => (i, i)))
+    db.stabilizeAll()
+    db.insert(r, (50 to 200).map(i => (i, i)))
+    // stabilize the relation OUTSIDE the probe window (stages the deltas)
+    db.evaluate(r).count()
+    val e = probeExecutions { db.stabilizeAll() }
+    assert(e == 1, s"a select-only fan-out round must be ONE action, saw $e")
+    vs.zipWithIndex.foreach { case (v, i) =>
+      assert(db.evaluate(v).collect().toSeq.sorted ==
+        (1 to 200).filter(_ % 4 == i).map(x => (x, x)))
+    }
     db.close()
   }
 

@@ -119,6 +119,22 @@ class PartitioningSpec extends AnyFunSuite {
     assert(Partitioning.exchangeCount(shuffled) == math.max(par, sp))
   }
 
+  test("an input repartitioned wider than shuffle partitions is never shrunk") {
+    val par = spark.sparkContext.defaultParallelism
+    val sp = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val wide = math.max(par, sp) * 3
+    val df = (1L to 2000L).toDF("id").repartition(wide)
+    assert(Partitioning.exchangeCount(df) == wide)
+    val plan = Partitioning.densifyCpu(df).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p                                                                => p
+    }
+    val topExchange = plan.collectFirst {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e.numPartitions
+    }
+    assert(topExchange.contains(wide), s"densifyCpu shrank a $wide-partition input: $topExchange")
+  }
+
   test("exchangeCount sizes a materialized checkpoint leaf by its blocks") {
     val par = spark.sparkContext.defaultParallelism
     val ck = (1L to 2000L).toDF("id").repartition(par + 5).localCheckpoint(true)

@@ -494,6 +494,16 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(z.toSeq == Seq((1L, 1048576L), (2L, 1048576L)))
   }
 
+  test("pcaPower: a ragged (short) vector drops its row instead of failing the job") {
+    val good = Seq((1L, Seq(1.0f, 0.5f)), (2L, Seq(2.0f, 1.0f)), (3L, Seq(-0.5f, 0.25f)))
+    val clean = Similarity.pcaPower(good.toDF("vec_id", "embedding"), "embedding", 2, 4)
+      .as[(Long, Long)].collect().sortBy(_._1)
+    val ragged = Similarity.pcaPower(
+      (good :+ ((4L, Seq(9.0f)))).toDF("vec_id", "embedding"), "embedding", 2, 4)
+      .as[(Long, Long)].collect().sortBy(_._1)
+    assert(ragged.toSeq == clean.toSeq)
+  }
+
   test("lookalike: matches a Scala grid-centroid replay; partition-invariant; seeds excluded") {
     val vecs = emb.select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toMap
     val seeds = vecs.filter(_._1 < 8)
