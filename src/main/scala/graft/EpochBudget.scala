@@ -19,17 +19,17 @@ import org.apache.spark.sql.SparkSession
   *    Dimension (customer) loads once; the fact side (orders) arrives in
   *    `batches` equal insert->stabilize epochs.
   *  - `fanout`: ONE relation feeding N dependent views (the DAG axis the
-  *    chain/join shapes miss): `stabilizeRelation` loops
-  *    `while (changed()) dependents.foreach(viewDeltaStep)`
-  *    (CoddSession.scala:265-272), so every epoch pays one delta step per
-  *    dependent view. The claim under test: per-epoch cost is LINEAR in N
-  *    with delta-sized work per view (each step reads only the relation's
-  *    recent set, never the other views). N comes from the 4th arg.
+  *    chain/join shapes miss): the relation's promotion stages one
+  *    `viewDeltaStep` per dependent view (`CoddSession.stabilize`), and
+  *    each view's `evaluate` promotes its delta in an action of its own,
+  *    so every epoch pays one delta step per dependent view. The claim
+  *    under test: per-epoch cost is LINEAR in N with delta-sized work per
+  *    view (each step reads only the relation's recent set, never the
+  *    other views). N comes from the 4th arg.
   *
-  * Prints per-epoch wall times (and the total). The compaction factor
-  * under test comes from `-Dgraft.compaction.factor` (default 2);
-  * SCALE.md records the sweep over factors x batch counts x shapes at
-  * sf1.
+  * Prints per-epoch wall times (and the total) under the engine's
+  * compaction factor ([[graft.core.Instance.CompactionFactor]]); SCALE.md
+  * records the r10 sweep over factors x batch counts x shapes at sf1.
   *
   *  - `fanout_one` (round 13): the same N-view fan-out driven by
   *    `stabilizeAll` — every view promotion batched into ONE Spark action
@@ -57,7 +57,6 @@ object EpochBudget {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val factor = sys.props.getOrElse("graft.compaction.factor", "2")
     val db = new graft.core.CoddSession(spark)
     val (n, times) = shape match {
       case "filter" =>
@@ -197,7 +196,7 @@ object EpochBudget {
     val tail = times.takeRight(5).map(t => f"$t%.2f").mkString("/")
     val nv = if (shape.startsWith("fanout")) s""""nviews":$nviews,""" else ""
     println(
-      f"""{"experiment":"epoch_budget","shape":"$shape","factor":$factor,""" +
+      f"""{"experiment":"epoch_budget","shape":"$shape","factor":${graft.core.Instance.CompactionFactor},""" +
         f""""batches":$batches,$nv"rows":$n,"total_sec":$total%.2f,""" +
         f""""mean_sec":${total / batches}%.3f,"last5":"$tail"}""")
     spark.stop()

@@ -21,7 +21,7 @@ import scala.reflect.ClassTag
   *  - materialized views kept incrementally up to date by per-operator delta
   *    rules — semi-naive evaluation, work proportional to delta size
   *    (evaluate.rs:25-260);
-  *  - stabilization with cycle guards cascading deltas down the view DAG
+  *  - stabilization cascading deltas down the view DAG
   *    (database.rs:287-336).
   *
   * Scale note: all per-epoch state lives in distributed Datasets; the driver
@@ -172,10 +172,7 @@ final class CoddSession private (
     * `collect_stable ∪ collect_recent` after stabilization).
     */
   def evaluate[T](expr: Expr[T]): Dataset[T] = {
-    if (sequentialStabilization) {
-      expr.relDeps.toSeq.sorted.foreach(stabilizeRelation)
-      expr.viewDeps.toSeq.sorted.foreach(stabilizeView)
-    } else stabilizeFused(expr.relDeps, expr.viewDeps)
+    stabilize(expr.relDeps, expr.viewDeps)
     val s = collectStable(expr)
     val memo = newMemo
     // After stabilization every leaf's recent is provably empty (the driver
@@ -247,10 +244,7 @@ final class CoddSession private (
     * stored views appear as `view_<id>`. Returns the lazy DataFrame.
     */
   def sql(query: String): DataFrame = {
-    if (sequentialStabilization) {
-      relations.keys.toSeq.sorted.foreach(stabilizeRelation)
-      views.keys.toSeq.sorted.foreach(stabilizeView)
-    } else stabilizeFused(relations.keys, views.keys)
+    stabilize(relations.keys, views.keys)
     relations.keys.toSeq.sorted.foreach { n =>
       relations(n).instance.stable.toDF().createOrReplaceTempView(n)
     }
@@ -261,32 +255,6 @@ final class CoddSession private (
   }
 
   // ------------------------------------------------------------ stabilization
-
-  /** Reference: database.rs:317-336. Missing names are ignored here; the
-    * collector raises `InstanceNotFound` when the leaf is actually read —
-    * matching the reference's behavior.
-    */
-  private def stabilizeRelation(name: String): Unit =
-    relations.get(name).foreach { e =>
-      if (!e.stabilizing) {
-        e.stabilizing = true
-        try while (e.instance.changed()) e.dependents.foreach(viewDeltaStep)
-        finally e.stabilizing = false
-      }
-    }
-
-  /** Reference: database.rs:287-314. */
-  private def stabilizeView(ref: Int): Unit =
-    views.get(ref).foreach { v =>
-      if (!v.stabilizing) {
-        v.stabilizing = true
-        try {
-          v.dependeeRels.toSeq.sorted.foreach(stabilizeRelation)
-          v.dependeeViews.toSeq.sorted.foreach(stabilizeView)
-          while (v.instance.changed()) v.dependents.foreach(viewDeltaStep)
-        } finally v.stabilizing = false
-      }
-    }
 
   /** One maintenance step of a view: compute the delta of its defining
     * expression and stage it (reference: instance.rs:284-290). Delta rules
@@ -312,7 +280,7 @@ final class CoddSession private (
 
   /** Replace a view's staged deltas with its whole content over its
     * dependees' committed state (stable ∪ recent), after a failed round
-    * of [[stabilizeFused]].
+    * of [[stabilize]].
     */
   private def rederive(ref: Int): Unit = {
     val v = views(ref)
@@ -333,10 +301,9 @@ final class CoddSession private (
   }
 
   /** Stabilize EVERY relation and view, batching each round of view
-    * promotions into ONE Spark action (SCALE.md r13 §fanout). The
-    * sequential path pays one job per dependent view per epoch — and the
-    * r12 fan-out measurement showed the per-view marginal cost (~0.24 s at
-    * N=32) converging to Spark's per-job scheduling floor, not to delta
+    * promotions into ONE Spark action (SCALE.md r13 §fanout). One job per
+    * dependent view per epoch would cost ~0.24 s per view at N=32 (the r12
+    * fan-out measurement): Spark's per-job scheduling floor, not delta
     * work. Here every view on the current DAG frontier PLANS its promotion
     * ([[Instance.prepareChanged]] — a lazy checkpoint, no action), then a
     * single union-of-counts action materializes all of them at once: N
@@ -352,45 +319,30 @@ final class CoddSession private (
     * measured-path promotions) fall back inline per instance — identical
     * semantics, just without the batching.
     */
-  def stabilizeAll(): Unit =
-    if (sequentialStabilization) {
-      relations.keys.toSeq.sorted.foreach(stabilizeRelation)
-      views.keys.toSeq.sorted.foreach(stabilizeView)
-    } else stabilizeFused(relations.keys, views.keys)
+  def stabilizeAll(): Unit = stabilize(relations.keys, views.keys)
 
-  /** Escape hatch for the spec's sequential-vs-fused property tests: when
-    * set, [[evaluate]]/[[sql]]/[[stabilizeAll]] run the original
-    * per-instance epoch loops ([[stabilizeRelation]]/[[stabilizeView]])
-    * instead of [[stabilizeFused]]. Semantics are identical by contract;
-    * only the job batching differs.
-    */
-  private[graft] var sequentialStabilization = false
-
-  /** Batched stabilization of a dependency CLOSURE — the sequential
-    * per-instance epoch loops fused so that ONE Spark action per
-    * dependency WAVE materializes every INDEPENDENT promotion on the
-    * frontier (SCALE.md r13 §fanout, generalized r14: relations promote
-    * in the same batched rounds as views, and `evaluate`/`sql` ride the
-    * batching too, not just `stabilizeAll`). The walk is topological
+  /** Batched stabilization of a dependency CLOSURE, the engine's one
+    * stabilization path: ONE Spark action per dependency WAVE
+    * materializes every INDEPENDENT promotion on the frontier (SCALE.md
+    * r13 §fanout, generalized r14: relations promote in the same batched
+    * rounds as views, and `evaluate`/`sql` ride the batching too, not
+    * just `stabilizeAll`). The walk is topological
     * (relations, then views in ascending id order — a view can only
     * depend on earlier-created views), and each deferred promotion is
     * installed as a PROVISIONAL `recent`
     * ([[Instance.installOptimistic]]) so the next level's delta plans
     * compose over it lazily; slots whose prepared plan reads another
     * prepared slot's still-lazy leaf materialize one wave later, so a
-    * chain costs one action per level (exactly the sequential path's
-    * count) while a flat N-instance fan-out still costs one.
-    *
-    * Semantics match the sequential path exactly:
+    * chain costs one action per level while a flat N-instance fan-out
+    * still costs one. Within a round:
     *  - simultaneous dependee deltas reach a view as ONE staged 3-term
-    *    rule application instead of two 1-term ones — same union by the
-    *    semi-naive identity δ(L⋈R) = δL⋈Rˢ ∪ Lˢ⋈δR ∪ δL⋈δR;
+    *    rule application — the semi-naive identity
+    *    δ(L⋈R) = δL⋈Rˢ ∪ Lˢ⋈δR ∪ δL⋈δR;
     *  - dependents OUTSIDE the closure get their delta staged only after
     *    a non-zero commit (their staged plans must never capture a leaf
-    *    a zero-count commit retires), reading the committed recent —
-    *    exactly what the sequential `viewDeltaStep` captures;
+    *    a zero-count commit retires), reading the committed recent;
     *  - instances whose epoch cannot defer (durable stores, over-budget
-    *    promotions) run inline inside the walk, exactly as before.
+    *    promotions) run inline inside the walk.
     *
     * A round that throws (a wave action, or an inline epoch) rolls back
     * every promotion it installed but did not commit
@@ -403,8 +355,9 @@ final class CoddSession private (
     * outside the closure get the delta of whatever did commit. A retry
     * thus converges to the from-scratch answer.
     */
-  private def stabilizeFused(rels0: Iterable[String], views0: Iterable[Int]): Unit = {
-    // dependee closure (what sequential stabilizeView recursion reaches)
+  private def stabilize(rels0: Iterable[String], views0: Iterable[Int]): Unit = {
+    // dependee closure; unregistered names are skipped (the collector
+    // raises InstanceNotFound when it reads such a leaf)
     val vset = mutable.SortedSet.empty[Int]
     def addV(id: Int): Unit = views.get(id).foreach { v =>
       if (vset.add(id)) v.dependeeViews.foreach(addV)
@@ -413,11 +366,6 @@ final class CoddSession private (
     val rset = mutable.SortedSet.empty[String]
     rels0.foreach(n => if (relations.contains(n)) rset += n)
     vset.foreach(id => views(id).dependeeRels.foreach(n => if (relations.contains(n)) rset += n))
-    // honor the re-entrancy guards the sequential loops use
-    val rs = rset.toSeq.filterNot(relations(_).stabilizing)
-    val vs = vset.toSeq.filterNot(views(_).stabilizing)
-    rs.foreach(relations(_).stabilizing = true)
-    vs.foreach(views(_).stabilizing = true)
     // promotions installed as provisional recents but not yet committed:
     // a round that throws rolls exactly these back
     val uncommitted = mutable.Buffer.empty[(Instance[Any], Instance.Prepared[Any])]
@@ -436,7 +384,7 @@ final class CoddSession private (
       if (live) viewDeltaStep(id)
     }
     try {
-      val slots: Seq[Either[String, Int]] = rs.map(Left(_)) ++ vs.map(Right(_))
+      val slots: Seq[Either[String, Int]] = rset.toSeq.map(Left(_)) ++ vset.toSeq.map(Right(_))
       def instOf(s: Either[String, Int]): Instance[Any] =
         s.fold(relations(_).instance, views(_).instance)
       def depsOf(s: Either[String, Int]): SortedSet[Int] =
@@ -516,11 +464,8 @@ final class CoddSession private (
     } catch {
       case t: Throwable =>
         uncommitted.foreach { case (inst, p) => inst.abortPrepared(p) }
-        (stepped ++ toStage).foreach(id => if (vs.contains(id)) rederive(id) else stageLive(id))
+        (stepped ++ toStage).foreach(id => if (vset.contains(id)) rederive(id) else stageLive(id))
         throw t
-    } finally {
-      rs.foreach(relations(_).stabilizing = false)
-      vs.foreach(views(_).stabilizing = false)
     }
   }
 
@@ -572,17 +517,17 @@ final class CoddSession private (
       collectRecent(pp.child, memo).map(pp.f)(pp.enc).distinct()
     case u: Union[_] =>
       val uu = u.asInstanceOf[Union[Any]]
-      unionDistinct(deltaTerm(uu.left, memo), deltaTerm(uu.right, memo), e)
+      unionDistinct(e, deltaTerm(uu.left, memo), deltaTerm(uu.right, memo))
     case i: Intersect[_] =>
       // δ = (δL ∩ Rˢ) ∪ (Lˢ ∩ δR) ∪ (δL ∩ δR)   (evaluate.rs:95-119);
       // terms whose delta side is provably empty are never composed.
       val ii = i.asInstanceOf[Intersect[Any]]
       val dl = deltaTerm(ii.left, memo); val dr = deltaTerm(ii.right, memo)
       unionDistinct(
+        e,
         dl.map(_.intersect(collectStable(ii.right))),
         dr.map(collectStable(ii.left).intersect(_)),
-        (for (l <- dl; r <- dr) yield l.intersect(r)),
-        e)
+        (for (l <- dl; r <- dr) yield l.intersect(r)))
     case d: Difference[_] =>
       // δ = δL − Rˢ; right-side deltas ignored — sound only because stored
       // views reject Difference (evaluate.rs:121-146). The reference's extra
@@ -596,19 +541,19 @@ final class CoddSession private (
       val pp = p.asInstanceOf[Prod[Any, Any, Any]]
       val dl = deltaTerm(pp.left, memo); val dr = deltaTerm(pp.right, memo)
       unionDistinct(
+        e,
         dl.map(prodDs(pp, _, collectStable(pp.right))),
         dr.map(prodDs(pp, collectStable(pp.left), _)),
-        (for (l <- dl; r <- dr) yield prodDs(pp, l, r)),
-        e)
+        (for (l <- dl; r <- dr) yield prodDs(pp, l, r)))
     case j: EquiJoin[_, _, _, _] =>
       // δ = δL⋈Rˢ ∪ Lˢ⋈δR ∪ δL⋈δR (evaluate.rs:198-250)
       val jj = j.asInstanceOf[EquiJoin[Any, Any, Any, Any]]
       val dl = deltaTerm(jj.left, memo); val dr = deltaTerm(jj.right, memo)
       unionDistinct(
+        e,
         dl.map(joinDs(jj, _, collectStable(jj.right))),
         dr.map(joinDs(jj, collectStable(jj.left), _)),
-        (for (l <- dl; r <- dr) yield joinDs(jj, l, r)),
-        e)
+        (for (l <- dl; r <- dr) yield joinDs(jj, l, r)))
   }).asInstanceOf[Dataset[T]]
 
   /** The child's delta, or `None` when provably empty (driver-side). */
@@ -616,18 +561,8 @@ final class CoddSession private (
     if (deltaFree(e, memo)) None else Some(collectRecent(e, memo))
 
   /** Distinct union of the present terms; empty when none are. */
-  private def unionDistinct(
-      t1: Option[Dataset[Any]],
-      t2: Option[Dataset[Any]],
-      of: Expr[_]): Dataset[Any] =
-    Seq(t1, t2).flatten.reduceOption(_ union _).map(_.distinct()).getOrElse(empty(of))
-
-  private def unionDistinct(
-      t1: Option[Dataset[Any]],
-      t2: Option[Dataset[Any]],
-      t3: Option[Dataset[Any]],
-      of: Expr[_]): Dataset[Any] =
-    Seq(t1, t2, t3).flatten.reduceOption(_ union _).map(_.distinct()).getOrElse(empty(of))
+  private def unionDistinct(of: Expr[_], terms: Option[Dataset[Any]]*): Dataset[Any] =
+    terms.flatten.reduceOption(_ union _).map(_.distinct()).getOrElse(empty(of))
 
   // ----------------------------------------------------------- stable rules
 
@@ -718,7 +653,6 @@ object CoddSession {
       val tag: ClassTag[_],
       val schema: org.apache.spark.sql.types.StructType) {
     var dependents: SortedSet[Int] = SortedSet.empty
-    var stabilizing = false
   }
 
   private final class ViewEntry(
@@ -729,6 +663,5 @@ object CoddSession {
       val dependeeRels: Set[String],
       val dependeeViews: Set[Int]) {
     var dependents: SortedSet[Int] = SortedSet.empty
-    var stabilizing = false
   }
 }

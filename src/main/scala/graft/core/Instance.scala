@@ -328,6 +328,18 @@ final class Instance[T](
       leaf.copy(ds = GraftColumnBridge.withMeasuredStats(
         leaf.ds, GraftColumnBridge.storageBytes(leaf.ds), rows))
 
+  /** The tail of every promotion, once its `n` rows are counted: measure
+    * the leaf, retire the epoch-private `spent` batch (a pin or staged
+    * checkpoint the count no longer needs), then install the leaf as
+    * `recent` — or, when empty, retire it and clear `recent`.
+    */
+  private def installCounted(raw: Leaf[T], n: Long, depth: Int, spent: Option[Leaf[T]]): Boolean = {
+    val leaf = measured(raw, n)
+    spent.foreach(retire)
+    if (n > 0) { recentBatch = Some(Run(leaf.ds, n, depth, Vector(leaf))); true }
+    else { retire(leaf); recentBatch = None; false }
+  }
+
   /** Epoch commit for reliable stores: write the live set as a NEW
     * `_MANIFEST.v<n>` (tmp-write + rename to a name that never pre-exists —
     * no delete-then-rename window, so a valid manifest exists at every
@@ -533,7 +545,7 @@ final class Instance[T](
   }
 
   /** Replace every engine-staged batch with `full`, a plan of this view's
-    * whole content (see `CoddSession.stabilizeFused`): the replaced
+    * whole content (see `CoddSession.stabilize`): the replaced
     * deltas may read promotions a failed round rolled back. `full` is
     * staged as merely distinct, so its promotion dedups against stable.
     */
@@ -542,10 +554,9 @@ final class Instance[T](
   }
 
   /** Phase 2: bookkeeping for a [[prepareChanged]] `Right`, given the
-    * count the caller's action measured. Identical to the tail of the
-    * fused promotion: attach measured stats, retire the epoch-private
-    * pin, install the batch as `recent` (or retire it when empty — also
-    * clearing any [[installOptimistic]] provisional install), commit
+    * count the caller's action measured: the promotion tail every epoch
+    * shares ([[installCounted]] — an empty count also clears any
+    * [[installOptimistic]] provisional install), then commit
     * the manifest (a no-op here — the deferred path only exists under
     * [[Instance.LocalCheckpoint]]).
     */
@@ -555,11 +566,7 @@ final class Instance[T](
     // OVER this batch from here on must execute under the session the
     // user configured
     val home = p.leaf.copy(ds = GraftColumnBridge.withSession(p.leaf.ds, session))
-    val leaf = measured(home, n)
-    p.pin.foreach(retire)
-    val result =
-      if (n > 0) { recentBatch = Some(Run(leaf.ds, n, p.depth, Vector(leaf))); true }
-      else { retire(leaf); recentBatch = None; false }
+    val result = installCounted(home, n, p.depth, p.pin)
     commitState()
     result
   }
@@ -628,10 +635,7 @@ final class Instance[T](
       } else { cached.unpersist(false); false }
     case _ =>
       val raw = materializeDurable(if (gated) sized(staged) else staged)
-      val n = raw.ds.count()
-      val leaf = measured(raw, n)
-      if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
-      else { retire(leaf); false }
+      installCounted(raw, raw.ds.count(), 0, None)
   }
 
   /** The delta-proportional dedup plan: stable streams map-side against the
@@ -704,12 +708,8 @@ final class Instance[T](
     if (gated) {
       val pin = if (direct) None else Some(materializeTransient(staged))
       val raw = materializeDurable(sized(broadcastNovelPlan(pin.map(_.ds).getOrElse(staged))))
-      val n = raw.ds.count()
-      val leaf = measured(raw, n)
       // novel is fully materialized by the count; the pin is epoch-private
-      pin.foreach(retire)
-      if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
-      else { retire(leaf); false }
+      installCounted(raw, raw.ds.count(), 0, pin)
     } else {
       val stagedLeaf = materializeTransient(staged)
       val stagedCp = stagedLeaf.ds
@@ -729,11 +729,7 @@ final class Instance[T](
             // left at its shuffle width — it reads all of stable.
             stagedCp.except(stable)
         val raw = materializeDurable(novel)
-        val n = raw.ds.count()
-        val leaf = measured(raw, n)
-        retire(stagedLeaf)
-        if (n > 0) { recentBatch = Some(Run(leaf.ds, n, 0, Vector(leaf))); true }
-        else { retire(leaf); false }
+        installCounted(raw, raw.ds.count(), 0, Some(stagedLeaf))
       }
     }
   }
@@ -817,12 +813,9 @@ object Instance {
     * count logarithmic in epochs at the flattest epoch-cost curve;
     * factor 1 over-compacts (more logical-union folds re-materialize per
     * [[MaxUnionDepth]], costing extra jobs), factor 4 under-compacts
-    * (longer stable chains make every promotion anti-join wider). Kept
-    * as a system property (`graft.compaction.factor`) so the experiment
-    * is re-runnable; production leaves the default.
+    * (longer stable chains make every promotion anti-join wider).
     */
-  val CompactionFactor: Long =
-    sys.props.get("graft.compaction.factor").map(_.toLong).getOrElse(2L)
+  val CompactionFactor: Long = 2L
 
   /** Broadcast budget for the promotion semi-join, against the MEASURED
     * block size of the staged checkpoint (deserialized, i.e. an overestimate

@@ -78,37 +78,40 @@ class CoddSessionExtrasSpec extends AnyFunSuite {
   }
 
   test("property: stabilizeAll == per-view stabilization over random schedules") {
-    // the batched epoch (one action per DAG round) must be a pure
+    // the batched epoch (one action per DAG wave) must be a pure
     // execution-strategy change: random insert schedules over a join
     // view AND a dependent view-over-view, one session driven by
-    // stabilizeAll, a twin by sequential evaluate — identical content at
-    // every epoch
+    // stabilizeAll, each view equal at every epoch to its defining
+    // expression evaluated from scratch over every row inserted so far
     val genBatch = Gen.listOf(Gen.zip(Gen.choose(0, 5), Gen.choose(0, 20)))
     val genSchedule = Gen.listOfN(3, Gen.zip(genBatch, genBatch))
+    def joined(r: Expr[(Int, Int)], s: Expr[(Int, Int)]) =
+      r.withKey(_._1).join(s.withKey(_._1)).on((k, l, rr) => (k, l._2 + rr._2))
+    def over(v: Expr[(Int, Int)]) = v.select(_._2 % 3 != 1).project(_._2)
     val prop = Prop.forAllNoShrink(genSchedule) { schedule =>
-      def build(db: CoddSession) = {
-        val r = db.addRelation[(Int, Int)]("r")
-        val s = db.addRelation[(Int, Int)]("s")
-        val v1 = db.storeView(
-          r.withKey(_._1).join(s.withKey(_._1)).on((k, l, rr) => (k, l._2 + rr._2)))
-        val v2 = db.storeView(v1.select(_._2 % 3 != 1).project(_._2))
-        (r, s, v1, v2)
-      }
-      val seqDb = new CoddSession(spark)
-      seqDb.sequentialStabilization = true // genuine per-instance loops
-      val batDb = new CoddSession(spark)
-      val (sr, ss, sv1, sv2) = build(seqDb)
-      val (br, bs, bv1, bv2) = build(batDb)
+      val db = new CoddSession(spark)
+      val r = db.addRelation[(Int, Int)]("r")
+      val s = db.addRelation[(Int, Int)]("s")
+      val v1 = db.storeView(joined(r, s))
+      val v2 = db.storeView(over(v1))
+      var rs = Seq.empty[(Int, Int)]
+      var ss = Seq.empty[(Int, Int)]
+      def oracle[T: Ordering](expr: (Expr[(Int, Int)], Expr[(Int, Int)]) => Expr[T]) =
+        FromScratch(spark) { f =>
+          val fr = f.addRelation[(Int, Int)]("r")
+          val fs = f.addRelation[(Int, Int)]("s")
+          f.insert(fr, rs); f.insert(fs, ss)
+          expr(fr, fs)
+        }
       var ok = true
       schedule.foreach { case (rb, sb) =>
-        if (rb.nonEmpty) { seqDb.insert(sr, rb); batDb.insert(br, rb) }
-        if (sb.nonEmpty) { seqDb.insert(ss, sb); batDb.insert(bs, sb) }
-        seqDb.evaluate(sv1).count(); seqDb.evaluate(sv2).count()
-        batDb.stabilizeAll()
-        ok &&= seqDb.evaluateSorted(sv1) == batDb.evaluateSorted(bv1)
-        ok &&= seqDb.evaluateSorted(sv2) == batDb.evaluateSorted(bv2)
+        if (rb.nonEmpty) { db.insert(r, rb); rs ++= rb }
+        if (sb.nonEmpty) { db.insert(s, sb); ss ++= sb }
+        db.stabilizeAll()
+        ok &&= db.evaluateSorted(v1) == oracle(joined)
+        ok &&= db.evaluateSorted(v2) == oracle((r, s) => over(joined(r, s)))
       }
-      seqDb.close(); batDb.close()
+      db.close()
       ok
     }
     val res = org.scalacheck.Test.check(

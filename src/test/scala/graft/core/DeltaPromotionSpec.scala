@@ -8,12 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * by its bytes, and a failed stabilization round rolls back what it
   * installed.
   *
-  * Contents are checked against a FROM-SCRATCH oracle — a fresh session
-  * that evaluates the view's defining expression ad hoc over every row
-  * inserted so far — not against the `sequentialStabilization` twin, which
-  * shares the delta step under test. Views are compared as sorted
-  * sequences, not sets: a delta wrongly promoted as novel shows up as a
-  * duplicate row.
+  * Contents are checked against the [[FromScratch]] oracle — a fresh
+  * session that evaluates the view's defining expression ad hoc over every
+  * row inserted so far. Views are compared as sorted sequences, not sets:
+  * a delta wrongly promoted as novel shows up as a duplicate row.
   */
 class DeltaPromotionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -24,15 +22,13 @@ class DeltaPromotionSpec extends AnyFunSuite {
   private type Row = (Int, Int)
   private def rows(r: Range): Seq[Row] = r.map(i => (i, i * 7 % 23))
 
-  /** `expr` evaluated over `all` in a fresh session, sorted. */
-  private def oracle[T: Ordering](all: Seq[Row])(expr: Rel[Row] => Expr[T]): Seq[T] = {
-    val o = new CoddSession(spark)
-    try {
+  /** `expr` over a relation `r` holding `all`, from scratch. */
+  private def oracle[T: Ordering](all: Seq[Row])(expr: Rel[Row] => Expr[T]): Seq[T] =
+    FromScratch(spark) { o =>
       val r = o.addRelation[Row]("r")
       o.insert(r, all)
-      o.evaluate(expr(r)).collect().toSeq.sorted
-    } finally o.close()
-  }
+      expr(r)
+    }
 
   private def contents[T: Ordering](db: CoddSession, v: Expr[T]): Seq[T] =
     db.evaluate(v).collect().toSeq.sorted
@@ -47,47 +43,41 @@ class DeltaPromotionSpec extends AnyFunSuite {
     Seq(rows(1 to 20)),
     Seq(rows(60 to 90) ++ rows(85 to 88), rows(80 to 110)))
 
-  private val modes = Seq("fused" -> false, "sequential" -> true)
-
-  modes.foreach { case (mode, sequential) =>
-    test(s"select chains over a relation match a from-scratch oracle ($mode)") {
-      val db = new CoddSession(spark)
-      db.sequentialStabilization = sequential
-      val r = db.addRelation[Row]("r")
-      val one: Rel[Row] => Expr[Row] = _.select(_._2 % 2 == 0)
-      val two: Rel[Row] => Expr[Row] = _.select(_._2 > 5).select(_._1 % 3 != 0)
-      val v1 = db.storeView(one(r))
-      val v2 = db.storeView(two(r))
-      var all = Seq.empty[Row]
-      epochs.zipWithIndex.foreach { case (batches, e) =>
-        batches.foreach { b => db.insert(r, b); all ++= b }
-        db.stabilizeAll()
-        assert(contents(db, v1) == oracle(all)(one), s"v1 after epoch $e")
-        assert(contents(db, v2) == oracle(all)(two), s"v2 after epoch $e")
-      }
-      db.close()
+  test("select chains over a relation match a from-scratch oracle (fused)") {
+    val db = new CoddSession(spark)
+    val r = db.addRelation[Row]("r")
+    val one: Rel[Row] => Expr[Row] = _.select(_._2 % 2 == 0)
+    val two: Rel[Row] => Expr[Row] = _.select(_._2 > 5).select(_._1 % 3 != 0)
+    val v1 = db.storeView(one(r))
+    val v2 = db.storeView(two(r))
+    var all = Seq.empty[Row]
+    epochs.zipWithIndex.foreach { case (batches, e) =>
+      batches.foreach { b => db.insert(r, b); all ++= b }
+      db.stabilizeAll()
+      assert(contents(db, v1) == oracle(all)(one), s"v1 after epoch $e")
+      assert(contents(db, v2) == oracle(all)(two), s"v2 after epoch $e")
     }
+    db.close()
+  }
 
-    test(s"select chains over a view match a from-scratch oracle ($mode)") {
-      val db = new CoddSession(spark)
-      db.sequentialStabilization = sequential
-      val r = db.addRelation[Row]("r")
-      // the base view is a project (dedup path); the chains over it are not
-      val base: Rel[Row] => Expr[Row] = _.project(t => (t._1 % 17, t._2))
-      val w = db.storeView(base(r))
-      val v1 = db.storeView(w.select(_._2 > 3))
-      val v2 = db.storeView(v1.select(_._1 % 2 == 1).select(_._2 < 20))
-      var all = Seq.empty[Row]
-      epochs.zipWithIndex.foreach { case (batches, e) =>
-        batches.foreach { b => db.insert(r, b); all ++= b }
-        // read only the deepest view: its evaluate stabilizes the chain
-        assert(contents(db, v2) ==
-          oracle(all)(r => base(r).select(_._2 > 3).select(_._1 % 2 == 1).select(_._2 < 20)),
-          s"v2 after epoch $e")
-        assert(contents(db, v1) == oracle(all)(r => base(r).select(_._2 > 3)), s"v1 after epoch $e")
-      }
-      db.close()
+  test("select chains over a view match a from-scratch oracle (fused)") {
+    val db = new CoddSession(spark)
+    val r = db.addRelation[Row]("r")
+    // the base view is a project (dedup path); the chains over it are not
+    val base: Rel[Row] => Expr[Row] = _.project(t => (t._1 % 17, t._2))
+    val w = db.storeView(base(r))
+    val v1 = db.storeView(w.select(_._2 > 3))
+    val v2 = db.storeView(v1.select(_._1 % 2 == 1).select(_._2 < 20))
+    var all = Seq.empty[Row]
+    epochs.zipWithIndex.foreach { case (batches, e) =>
+      batches.foreach { b => db.insert(r, b); all ++= b }
+      // read only the deepest view: its evaluate stabilizes the chain
+      assert(contents(db, v2) ==
+        oracle(all)(r => base(r).select(_._2 > 3).select(_._1 % 2 == 1).select(_._2 < 20)),
+        s"v2 after epoch $e")
+      assert(contents(db, v1) == oracle(all)(r => base(r).select(_._2 > 3)), s"v1 after epoch $e")
     }
+    db.close()
   }
 
   test("a fork followed by divergent inserts keeps each side exact") {
@@ -224,17 +214,15 @@ class DeltaPromotionSpec extends AnyFunSuite {
   }
 
   /** A round inserting rows 6..9 fails while [[DeltaPromotionSpec.armed]]
-    * (`view` throws on row 7); it must free its checkpoints at once (fused)
-    * or by [[CoddSession.close]] (both), keep the inserted rows, and fail
+    * (`view` throws on row 7); it must free its checkpoints at once, keep
+    * the inserted rows, and fail
     * again on retry while the fault lasts. Once the fault is lifted, a
     * retry converges to the from-scratch answer and the session keeps
     * maintaining the view.
     */
-  private def failedRoundRecovers(sequential: Boolean, seed: Seq[Row])(
-      view: Rel[Row] => Expr[Row]): Unit = {
+  private def failedRoundRecovers(seed: Seq[Row])(view: Rel[Row] => Expr[Row]): Unit = {
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val db = new CoddSession(spark)
-    db.sequentialStabilization = sequential
     val r = db.addRelation[Row]("r")
     val v = db.storeView(view(r))
     db.insert(r, seed)
@@ -247,10 +235,8 @@ class DeltaPromotionSpec extends AnyFunSuite {
       val e = intercept[Exception](db.stabilizeAll())
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("marked row 7")))
-      if (!sequential) {
-        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- blocksSettled
-        assert(leaked.isEmpty, s"the failed round left checkpoints behind: $leaked")
-      }
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- blocksSettled
+      assert(leaked.isEmpty, s"the failed round left checkpoints behind: $leaked")
       // the faulty row is still there, so is the fault
       intercept[Exception](db.stabilizeAll())
     } finally DeltaPromotionSpec.armed = false
@@ -266,17 +252,15 @@ class DeltaPromotionSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"checkpoints outlived the session: $leaked")
   }
 
-  modes.foreach { case (mode, sequential) =>
-    test(s"a failed wave action rolls back and a retry converges ($mode)") {
-      // a select view: its prepare runs nothing, so the wave action throws
-      failedRoundRecovers(sequential, rows(1 to 3))(_.select(marked))
-    }
+  test("a failed wave action rolls back and a retry converges (fused)") {
+    // a select view: its prepare runs nothing, so the wave action throws
+    failedRoundRecovers(rows(1 to 3))(_.select(marked))
+  }
 
-    test(s"a failed inline prepare rolls back and a retry converges ($mode)") {
-      // a project view over a non-empty stable set: its prepare broadcasts
-      // the delta for the dedup, which throws before any wave action
-      failedRoundRecovers(sequential, rows(1 to 6))(_.select(marked).project(t => (t._1, 0)))
-    }
+  test("a failed inline prepare rolls back and a retry converges (fused)") {
+    // a project view over a non-empty stable set: its prepare broadcasts
+    // the delta for the dedup, which throws before any wave action
+    failedRoundRecovers(rows(1 to 6))(_.select(marked).project(t => (t._1, 0)))
   }
 
   test("a failed round re-derives a chain of views over the rolled-back relation") {

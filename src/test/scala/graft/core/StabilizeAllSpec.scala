@@ -4,11 +4,10 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[CoddSession.stabilizeAll]] — the batched epoch (one Spark action per
-  * view-DAG round) must be CONTENT-EQUIVALENT to the sequential
-  * per-view stabilization it accelerates: same view contents, same set
-  * semantics, same multi-epoch/multi-level cascade behavior, and the two
-  * paths must interleave freely on one session (a user may mix
-  * `stabilizeAll` epochs with ordinary `evaluate`s).
+  * view-DAG wave) must keep every view equal to its defining expression
+  * evaluated from scratch ([[FromScratch]]): same rows, each once, across
+  * multi-epoch/multi-level cascades, and `stabilizeAll` epochs must
+  * interleave freely with ordinary `evaluate`s on one session.
   */
 class StabilizeAllSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -16,6 +15,23 @@ class StabilizeAllSpec extends AnyFunSuite {
   import Expr._
 
   private def fresh = new CoddSession(spark)
+
+  /** Orders, customers, and a join view over the orders above 100. */
+  private def ordersByCustomer(db: CoddSession) = {
+    val o = db.addRelation[(Int, Int)]("orders")
+    val c = db.addRelation[(Int, String)]("cust")
+    val joined = o.select(_._2 > 100).withKey(_._1)
+      .join(c.withKey(_._1)).on((k, ord, cu) => (k, cu._2, ord._2))
+    (o, c, joined)
+  }
+
+  /** [[ordersByCustomer]]'s join over `orders` and `cust`, from scratch. */
+  private def joinOracle(orders: Seq[(Int, Int)], cust: Seq[(Int, String)]) =
+    FromScratch(spark) { f =>
+      val (o, c, joined) = ordersByCustomer(f)
+      f.insert(o, orders); f.insert(c, cust)
+      joined
+    }
 
   test("flat fan-out: N views over one relation, one batched epoch each") {
     val db = fresh
@@ -59,35 +75,25 @@ class StabilizeAllSpec extends AnyFunSuite {
   }
 
   test("batched epochs match a sequential twin session exactly (join view)") {
-    val seqDb = fresh
-    seqDb.sequentialStabilization = true // genuine per-instance loops
-    val batDb = fresh
-    def build(db: CoddSession) = {
-      val o = db.addRelation[(Int, Int)]("orders")
-      val c = db.addRelation[(Int, String)]("cust")
-      val v = db.storeView(
-        o.select(_._2 > 100).withKey(_._1)
-          .join(c.withKey(_._1)).on((k, ord, cu) => (k, cu._2, ord._2)))
-      (o, c, v)
-    }
-    val (so, sc, sv) = build(seqDb)
-    val (bo, bc, bv) = build(batDb)
+    // the twin is a fresh session per epoch evaluating the view's
+    // expression from scratch over every row inserted so far
+    val db = fresh
+    val (o, c, joined) = ordersByCustomer(db)
+    val v = db.storeView(joined)
     val custRows = (1 to 20).map(i => (i, s"c$i"))
     val epochs = Seq(
       (1 to 30).map(i => (i % 20 + 1, i * 10)),
       (1 to 10).map(i => (i, 50 + i * 20)),
       Seq((1, 110), (1, 110), (2, 999))) // dup rows + dup epoch content
-    seqDb.insert(sc, custRows); batDb.insert(bc, custRows)
+    db.insert(c, custRows)
+    var orders = Seq.empty[(Int, Int)]
     epochs.foreach { batch =>
-      seqDb.insert(so, batch)
-      seqDb.evaluate(sv).count() // sequential stabilization epoch
-      batDb.insert(bo, batch)
-      batDb.stabilizeAll() // batched epoch
-      val s = seqDb.evaluate(sv).collect().toSet
-      val b = batDb.evaluate(bv).collect().toSet
-      assert(b == s, s"batched != sequential after batch of ${batch.size}")
+      db.insert(o, batch); orders ++= batch
+      db.stabilizeAll() // batched epoch
+      assert(db.evaluateSorted(v) == joinOracle(orders, custRows),
+        s"batched != from scratch after batch of ${batch.size}")
     }
-    seqDb.close(); batDb.close()
+    db.close()
   }
 
   test("empty deltas and already-stable sessions are a quiet no-op") {
@@ -135,11 +141,10 @@ class StabilizeAllSpec extends AnyFunSuite {
   }
 
   test("fused evaluate: one action per dependency wave; a fan-out epoch is ONE action (r14)") {
-    // A chain pays one action per DAG level (the sequential count — a
-    // dependent's plan must never race its dependee's still-lazy leaf in
-    // one union action), but SIBLING views fuse: rel→(v1,v2) epochs run
-    // the relation wave, then ONE action for both views, then the
-    // consumer count.
+    // A chain pays one action per DAG level (a dependent's plan must
+    // never race its dependee's still-lazy leaf in one union action), but
+    // SIBLING views fuse: rel→(v1,v2) epochs run the relation wave, then
+    // ONE action for both views, then the consumer count.
     val db = fresh
     val r = db.addRelation[Int]("r")
     val v1 = db.storeView(r.select(_ % 2 == 0))
@@ -155,10 +160,9 @@ class StabilizeAllSpec extends AnyFunSuite {
     // checkpoint execution (the broadcast-dedup futures fire at RDD
     // construction — inherent to Dataset.localCheckpoint); the two select
     // views' deltas are novel by construction, so their prepares build no
-    // dedup plan and run nothing. The THREE per-instance count actions of
-    // the sequential path collapse into TWO wave actions (rel, then both
-    // views fused), plus the cached first batch's flatten and the
-    // consumer count: 1 + 2 + 1 + 1.
+    // dedup plan and run nothing. The three promotions run as TWO wave
+    // actions (rel, then both views fused), plus the cached first batch's
+    // flatten and the consumer count: 1 + 2 + 1 + 1.
     assert(e2 == 5, s"epoch 2 must be 1 prepare + 2 wave actions + flatten + 1 count, saw $e2")
     assert(db.evaluateSorted(v2) == (1 to 60 by 2))
     // a duplicate-only epoch: zero-novel commits must unwind cleanly
@@ -189,19 +193,11 @@ class StabilizeAllSpec extends AnyFunSuite {
   }
 
   test("fused evaluate matches a sequential twin across mixed epochs (join view)") {
-    val seqDb = fresh
-    seqDb.sequentialStabilization = true
-    val batDb = fresh
-    def build(db: CoddSession) = {
-      val o = db.addRelation[(Int, Int)]("orders")
-      val c = db.addRelation[(Int, String)]("cust")
-      val v = db.storeView(
-        o.select(_._2 > 100).withKey(_._1)
-          .join(c.withKey(_._1)).on((k, ord, cu) => (k, cu._2, ord._2)))
-      (o, c, v)
-    }
-    val (so, sc, sv) = build(seqDb)
-    val (bo, bc, bv) = build(batDb)
+    // the twin is a fresh session per epoch evaluating the view's
+    // expression from scratch over every row inserted so far
+    val db = fresh
+    val (o, c, joined) = ordersByCustomer(db)
+    val v = db.storeView(joined)
     // BOTH relations receive batches in the SAME epoch — the fused round
     // promotes them together and the view's one staged delta must apply
     // the full 3-term rule (δL⋈Rˢ ∪ Lˢ⋈δR ∪ δL⋈δR)
@@ -209,21 +205,22 @@ class StabilizeAllSpec extends AnyFunSuite {
       ((1 to 15).map(i => (i, s"c$i")), (1 to 30).map(i => (i % 15 + 1, i * 10))),
       ((10 to 25).map(i => (i, s"c$i")), (1 to 10).map(i => (i + 10, 50 + i * 20))),
       (Seq((1, "c1")), Seq((1, 110), (1, 110), (2, 999))))
+    var orders = Seq.empty[(Int, Int)]
+    var cust = Seq.empty[(Int, String)]
     epochs.foreach { case (cb, ob) =>
-      seqDb.insert(sc, cb); seqDb.insert(so, ob)
-      batDb.insert(bc, cb); batDb.insert(bo, ob)
-      val s = seqDb.evaluate(sv).collect().toSet
-      val b = batDb.evaluate(bv).collect().toSet
-      assert(b == s, "fused evaluate diverged from the sequential twin")
+      db.insert(c, cb); db.insert(o, ob)
+      cust ++= cb; orders ++= ob
+      assert(db.evaluateSorted(v) == joinOracle(orders, cust),
+        "fused evaluate diverged from the from-scratch oracle")
     }
-    seqDb.close(); batDb.close()
+    db.close()
   }
 
   test("one batched round runs ONE action for a flat 8-view fan-out") {
-    // count DISTINCT SQL executions (actions) in a scoped job group: the
-    // sequential path runs one count() action per view (8 execution ids);
-    // the batched round must run exactly ONE — the union-of-counts action
-    // whose AQE stage sub-jobs all share that execution id
+    // count DISTINCT SQL executions (actions): one count() action per view
+    // would be 8 execution ids; the batched round must run exactly ONE —
+    // the union-of-counts action whose AQE stage sub-jobs all share that
+    // execution id
     val db = fresh
     val r = db.addRelation[(Int, Int)]("r")
     val vs = (0 until 8).map { i =>
@@ -231,38 +228,14 @@ class StabilizeAllSpec extends AnyFunSuite {
     }
     db.insert(r, (1 to 100).map(i => (i, i)))
     // stabilize the relation OUTSIDE the probe window (stages the 8 view
-    // deltas): the relation's own epoch is identical in both paths
+    // deltas)
     db.evaluate(r).count()
-    val group = s"stabilize_probe_${java.util.UUID.randomUUID()}"
-    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val sentinel = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id")) {
-          // SQL actions carry an execution id; the bare-RDD sentinel does not
-          Option(j.properties.getProperty("spark.sql.execution.id")) match {
-            case Some(id) => execIds.add(id)
-            case None     => sentinel.incrementAndGet()
-          }
-        }
+    val e = probeExecutions { db.stabilizeAll() }
+    assert(e == 1, s"a batched 8-view round must be ONE action, saw $e")
+    vs.zipWithIndex.foreach { case (v, i) =>
+      assert(db.evaluate(v).collect().toSet ==
+        (1 to 100).filter(_ % 8 == i).map(x => (x, i)).toSet)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "stabilizeAll window")
-      db.stabilizeAll()
-      spark.sparkContext.range(0, 1).count() // FIFO sentinel, same group
-      spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (sentinel.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(execIds.size == 1,
-        s"a batched 8-view round must be ONE action, saw executions: $execIds")
-      vs.zipWithIndex.foreach { case (v, i) =>
-        assert(db.evaluate(v).collect().toSet ==
-          (1 to 100).filter(_ % 8 == i).map(x => (x, i)).toSet)
-      }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      db.close()
-    }
+    db.close()
   }
 }

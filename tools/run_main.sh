@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt lock): tools/run_main.sh graft.Bench [args...]
 # Env passthrough: SPARK_GRAFT_* vars, SPARK_DRIVER_MEM (default 16g),
-# GRAFT_JAVA_PROPS for extra -D flags (e.g. "-Dgraft.compaction.factor=4").
+# GRAFT_JAVA_PROPS for extra -D flags.
 set -euo pipefail
 CLS="$1"; shift
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
